@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
   * three timed runs in fixed sorted name order — one-shot timing noise
   * (GC, page cache) can only inflate, so min-of-3 is the stable estimator.
   * Determinism-only global sorts are excluded via
-  * [[graft.queries.Relational.benchVariants]]; the verified (sorted)
+  * [[SparkEntry.benchVariants]]; the verified (sorted)
   * plans still run in graft.Verify. A failing query is reported as `-1`
   * with its error recorded and a nonzero exit code.
   *
@@ -172,17 +172,7 @@ object Bench {
     // (substring match). The driver sets no filter and benches everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val ordered = (SparkEntry.queries ++
-        graft.queries.Relational.benchVariants ++
-        graft.queries.LlmOps.benchVariants ++
-        graft.queries.TextOps.benchVariants ++
-        graft.queries.Sessions.benchVariants ++
-        graft.queries.ZOrder.benchVariants ++
-        graft.queries.Txn.benchVariants ++
-        graft.queries.Materialized.benchVariants ++
-        graft.multimodal.Multimodal.benchVariants ++
-        graft.ml.QualityFilter.benchVariants)
-      .toSeq.sortBy(_._1)
+    val ordered = SparkEntry.benchQueries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
     val (calCpu, calShuffle) = calibrate(spark)
     // Warmup: one untimed pass over every query (catches codegen + scan

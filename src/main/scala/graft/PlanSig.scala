@@ -49,20 +49,8 @@ object PlanSig {
 
   /** The plan each query actually runs in the bench (variant if one
     * exists — the semantic plan without determinism-only sorts). */
-  def benchPlans: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] = {
-    val variants =
-      graft.queries.Relational.benchVariants ++
-        graft.queries.LlmOps.benchVariants ++
-        graft.queries.TextOps.benchVariants ++
-        graft.queries.Sessions.benchVariants ++
-        graft.queries.ZOrder.benchVariants ++
-        graft.queries.Txn.benchVariants ++
-        graft.queries.Materialized.benchVariants ++
-        graft.multimodal.Multimodal.benchVariants
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> variants.getOrElse(name, fn)
-    }.toSeq.sortBy(_._1)
-  }
+  def benchPlans: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
+    SparkEntry.benchQueries.toSeq.sortBy(_._1)
 }
 
 /** Regenerate the committed snapshot after an INTENTIONAL plan change:

@@ -26,6 +26,20 @@ object SparkEntry {
       graft.queries.Txn.queries ++ graft.queries.Materialized.queries ++
       graft.queries.PageRank.queries ++ graft.ml.QualityFilter.queries
 
+  /** Bench forms of some `queries` keys: the semantic plan without
+    * determinism-only output sorts. The one union Bench, PlanSig (plan
+    * snapshot, guard-rails) and Explain `--bench` all read. */
+  val benchVariants: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.Relational.benchVariants ++ graft.queries.LlmOps.benchVariants ++
+      graft.queries.TextOps.benchVariants ++ graft.queries.Sessions.benchVariants ++
+      graft.queries.ZOrder.benchVariants ++ graft.queries.Txn.benchVariants ++
+      graft.queries.Materialized.benchVariants ++ graft.multimodal.Multimodal.benchVariants ++
+      graft.ml.QualityFilter.benchVariants
+
+  /** The plan each query runs in the bench: its variant if it has one. */
+  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
+    queries ++ benchVariants
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (driver records a weaker rows-only check). */

@@ -53,19 +53,38 @@ object NextDayTemp {
   final case class Fit(model: PipelineModel, r2Train: Double, r2Test: Double,
                        nTrain: Long, nTest: Long)
 
+  /** Partitions the fit's input needs: one per
+    * `spark.sql.files.maxPartitionBytes` of the optimized plan's size
+    * estimate, at least one. Small files scan as about one split each,
+    * so without this every one of the GBT's jobs runs a task per file
+    * however few rows there are. `coalesce` never raises a
+    * count, so the input's own partition count stays the upper bound. */
+  private[graft] def fitPartitions(flat: DataFrame): Int = {
+    val size = flat.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = BigInt(flat.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    ((size + split - 1) / split).max(1).min(Int.MaxValue).toInt
+  }
+
   /** M1+M2+M4: split, fit, score. R² is computed on both splits; on tiny
     * data the test split is a handful of rows, so callers should gate on
     * r2Train (the reference's own score is over 3 rows and just as
-    * unstable, weather_etl.py:129). */
+    * unstable, weather_etl.py:129).
+    *
+    * The input is coalesced to [[fitPartitions]] and persisted for the
+    * whole fit — split, indexer, GBT, both evaluations and the counts
+    * read it instead of rescanning the source — then released. */
   def fit(flat: DataFrame): Fit = {
-    val Array(train, test) = flat.randomSplit(Array(0.9, 0.1), seed = 365)
-    val model = pipeline(flat).fit(train)
-    val eval = new RegressionEvaluator()
-      .setLabelCol(labelCol).setPredictionCol("prediction").setMetricName("r2")
-    Fit(model,
-      r2Train = eval.evaluate(model.transform(train)),
-      r2Test = if (test.isEmpty) Double.NaN else eval.evaluate(model.transform(test)),
-      nTrain = train.count(), nTest = test.count())
+    val input = flat.coalesce(fitPartitions(flat)).persist()
+    try {
+      val Array(train, test) = input.randomSplit(Array(0.9, 0.1), seed = 365)
+      val model = pipeline(input).fit(train)
+      val eval = new RegressionEvaluator()
+        .setLabelCol(labelCol).setPredictionCol("prediction").setMetricName("r2")
+      Fit(model,
+        r2Train = eval.evaluate(model.transform(train)),
+        r2Test = if (test.isEmpty) Double.NaN else eval.evaluate(model.transform(test)),
+        nTrain = train.count(), nTest = test.count())
+    } finally input.unpersist()
   }
 
   /** P10: per-row absolute prediction error (the reference's

@@ -27,18 +27,29 @@ object Publish {
   private def requireIdent(kind: String, name: String): Unit =
     require(Ident.matches(name), s"invalid $kind identifier: '$name'")
 
+  /** REBALANCE(date): route each date's rows to the same write task(s).
+    * With AQE on, small dates coalesce into one file each and a skewed
+    * date splits into advisory-sized files; with AQE off it is a plain
+    * hash-by-date shuffle, one task (and file) per date. */
+  def byDate(df: DataFrame): DataFrame = df.hint("rebalance", col("date"))
+
   /** K5 + K4: get-or-create the database, then publish as a single
-    * date-partitioned parquet table registered in the catalog. */
+    * date-partitioned parquet table registered in the catalog, with its
+    * size: until analyzed, a partitioned catalog table plans as
+    * `spark.sql.defaultSizeInBytes` (8 EB), so size-driven readers such
+    * as [[graft.ml.NextDayTemp.fit]] could not right-size against it.
+    * NOSCAN takes the size from a file listing, reading no rows. */
   def publishPartitioned(spark: SparkSession, df: DataFrame,
                          path: String, db: String, table: String): Unit = {
     requireIdent("database", db)
     requireIdent("table", table)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    df.write.mode("overwrite")
+    byDate(df).write.mode("overwrite")
       .partitionBy("date")
       .option("path", path)
       .format("parquet")
       .saveAsTable(s"$db.$table")
+    spark.sql(s"ANALYZE TABLE $db.$table COMPUTE STATISTICS NOSCAN")
   }
 
   /** K6 + F2: the serving path (app/app.py:25-28) — equality filter (or

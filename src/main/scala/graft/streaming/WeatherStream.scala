@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.sinks.Publish
 import graft.weather.Weather
 
 /** §2.12: the reference's incremental semantics — Airflow `@daily` over
@@ -23,7 +24,9 @@ import graft.weather.Weather
   * At scale: the file source lists incrementally (maxFilesPerTrigger
   * bounds a micro-batch), flatten is a pure projection, and the sink
   * writes `partitionBy(date)` so each batch touches only the date
-  * partitions it contains — no global state, no shuffle.
+  * partitions it contains — no global state. The one shuffle is the
+  * sink's REBALANCE(date) ([[graft.sinks.Publish.byDate]]), which
+  * leaves one file per date per batch instead of one per task.
   */
 object WeatherStream {
 
@@ -55,6 +58,6 @@ object WeatherStream {
   private[streaming] def publishBatch(batch: DataFrame, outPath: String): Unit = {
     batch.sparkSession.conf
       .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch.write.mode("overwrite").partitionBy("date").parquet(outPath)
+    Publish.byDate(batch).write.mode("overwrite").partitionBy("date").parquet(outPath)
   }
 }

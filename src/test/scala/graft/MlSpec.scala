@@ -37,6 +37,31 @@ class MlSpec extends AnyFunSuite {
     assert(rows.map(_.getDouble(2)).max < 10.0)
   }
 
+  test("fit releases its persisted input and is repeatable on the same frame") {
+    val sc = spark.sparkContext
+    // a plan no other test fits: an input cached by an earlier fit of the
+    // same plan would be reused, hiding a leak from the id check below
+    val frame = flat.where(org.apache.spark.sql.functions.col("city").isNotNull)
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val stored = sc.getRDDStorageInfo.map(_.id).toSet
+    val Seq(a, b) = Seq.fill(2)(NextDayTemp.fit(frame))
+    // ids, not counts: the context cleaner may drop an earlier suite's
+    // unreachable RDD meanwhile, but nothing the fit persisted may stay
+    assert(sc.getPersistentRDDs.keySet.toSet.subsetOf(persisted))
+    assert(sc.getRDDStorageInfo.map(_.id).toSet.subsetOf(stored))
+    assert(a.nTrain + a.nTest === 27)
+    assert((a.nTrain, a.nTest, a.r2Train) === ((b.nTrain, b.nTest, b.r2Train)))
+  }
+
+  test("fit reads a published table as one partition per maxPartitionBytes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ml_pub").toString
+    graft.sinks.Publish.publishPartitioned(spark, flat, s"$dir/w", "ml_db", "weather")
+    val published = spark.table("ml_db.weather")
+    assert(published.rdd.getNumPartitions > 1)
+    assert(NextDayTemp.fitPartitions(published) === 1)
+    assert(NextDayTemp.fitPartitions(flat) === 1)
+  }
+
   test("M3/M5 next-day prediction: one finite row per city, shifted +86400s") {
     val preds = NextDayTemp.predictNextDay(spark, fit.model, flat)
     val rows = preds.collect()

@@ -39,4 +39,9 @@ class PlanSnapshotSpec extends AnyFunSuite {
         s"if intentional):\n${diffs.mkString("\n")}" +
         (if (stale.nonEmpty) s"\nstale snapshot entries: $stale" else ""))
   }
+
+  test("every bench variant overrides a registered query") {
+    val orphans = SparkEntry.benchVariants.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"bench variants without a base query: $orphans")
+  }
 }

@@ -26,8 +26,16 @@ class SinksSpec extends AnyFunSuite {
     // path read: one directory per date partition
     val viaPath = spark.read.parquet(s"$dir/weather")
     assert(viaPath.count() === 27)
-    assert(new java.io.File(s"$dir/weather").listFiles()
-      .count(_.getName.startsWith("date=")) === 3)
+    val dates = new java.io.File(s"$dir/weather").listFiles().filter(_.getName.startsWith("date="))
+    assert(dates.length === 3)
+    // REBALANCE(date): one data file per date, and the catalog carries
+    // the table's size (the bytes of those files)
+    val data = dates.map { d =>
+      val files = d.listFiles().filter(_.getName.startsWith("part-"))
+      assert(files.length === 1, s"${d.getName}: ${files.map(_.getName).mkString(", ")}")
+      files.head
+    }
+    assert(viaTable.queryExecution.optimizedPlan.stats.sizeInBytes === BigInt(data.map(_.length).sum))
     // partition pruning: a date predicate reads a single partition
     val pruned = viaTable.filter("date = '2023-08-11'")
     assert(pruned.count() === 9)

@@ -25,6 +25,11 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("date", col("date").cast("string"))
     assert(streamed.count() === 27)
     assert(streamed.select("date").distinct().count() === 3)
+    // the sink's REBALANCE(date) leaves one data file per date
+    new java.io.File(out).listFiles().filter(_.getName.startsWith("date=")).foreach { d =>
+      val data = d.listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(data.length === 1, s"${d.getName}: ${data.mkString(", ")}")
+    }
 
     val batch = Weather.flatten(Weather.readRaw(spark, dataDir))
     val key = Seq("city", "date", "localtime_epoch", "temp_c")
